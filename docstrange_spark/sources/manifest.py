@@ -6,10 +6,13 @@ manifest schema is what an Iceberg snapshot/manifest would carry):
 
 - documents are assigned a stable **bucket** = ``pmod(xxhash64(doc_id),
   n_buckets)`` — the commit unit;
-- processing runs in **waves** of buckets; after a wave's output data is
-  durably written, one manifest row per bucket is appended recording
-  lineage: run_id, input snapshot id, bucket range, doc/span/block
-  counts, wall-clock;
+- processing runs in **waves** of buckets: one data-write job whose
+  ``Observation``s count docs/spans in and docs/blocks out per bucket (no
+  job runs just to count), then one commit appending a manifest row per
+  bucket with the lineage: run_id, input snapshot id, bucket,
+  doc/span/block counts, wall-clock. Docs out must equal docs in per
+  bucket (one output row per doc; a re-executed stage can re-apply
+  accumulator updates), else the wave raises and commits nothing;
 - **resume** = anti-join: buckets already present in the manifest for the
   same (input snapshot, config fingerprint) are skipped, so a killed job
   reprocesses only uncommitted buckets and the final table is identical
@@ -22,12 +25,13 @@ commit. The interface is identical; only the IO swaps.
 
 from __future__ import annotations
 
-import json
+import hashlib
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
@@ -41,17 +45,18 @@ MANIFEST_SCHEMA = (
 
 def snapshot_id_of(path: str) -> str:
     """Deterministic input-snapshot fingerprint for a parquet dir (file
-    names + sizes + mtimes — the parquet stand-in for an Iceberg
-    snapshot id)."""
+    paths relative to ``path`` + sizes, walked in sorted order — the
+    parquet stand-in for an Iceberg snapshot id). A flat dir hashes its
+    bare file names; a partitioned one also sees which partition dir
+    holds each file."""
     entries = []
-    for root, _, files in os.walk(path):
+    for root, dirnames, files in os.walk(path):
+        dirnames.sort()
         for f in sorted(files):
             if f.startswith(("_", ".")):
                 continue
-            st = os.stat(os.path.join(root, f))
-            entries.append(f"{f}:{st.st_size}")
-    import hashlib
-
+            full = os.path.join(root, f)
+            entries.append(f"{os.path.relpath(full, path)}:{os.stat(full).st_size}")
     return hashlib.md5("|".join(entries).encode()).hexdigest()
 
 
@@ -61,9 +66,20 @@ def committed_buckets(spark: SparkSession, out_dir: str, snapshot_id: str) -> se
         f.endswith(".parquet") for f in os.listdir(mpath)
     ):
         return set()
-    m = spark.read.parquet(mpath)
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(mpath)
     rows = m.where(F.col("snapshot_id") == snapshot_id).select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}
+
+
+def _per_bucket(df: DataFrame, wave: list[int], **sums) -> tuple[DataFrame, Observation]:
+    """Observe ``n_docs`` and a sum of each ``sums`` column per bucket of the wave."""
+    obs = Observation()
+    aggs = []
+    for b in wave:
+        hit = F.col("bucket") == b
+        aggs.append(F.count_if(hit).alias(f"n_docs_{b}"))
+        aggs += [F.sum(F.when(hit, c)).alias(f"{k}_{b}") for k, c in sums.items()]
+    return df.observe(obs, *aggs), obs
 
 
 def process_resumable(
@@ -78,15 +94,19 @@ def process_resumable(
     """Run ``process`` over the span table bucket-wise with manifest
     commits; skips buckets already committed for this snapshot.
 
+    The manifest rows are committed from a pandas frame, which crosses
+    to the JVM as Arrow; a Python-list ``createDataFrame`` ran as a
+    Python-RDD job and took 0.7-1.0 s per 4-row commit against
+    0.18-0.22 s (local[4]).
+
     Returns a summary dict (buckets processed / skipped).
     """
     spark = spans_df.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
 
-    bucketed = spans_df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    bucket_of = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    bucketed = spans_df.withColumn("bucket", bucket_of)
     done = committed_buckets(spark, out_dir, snapshot_id)
     todo = [b for b in range(n_buckets) if b not in done]
 
@@ -97,18 +117,9 @@ def process_resumable(
     for w in range(0, len(todo), wave_size):
         wave = todo[w : w + wave_size]
         wave_in = bucketed.where(F.col("bucket").isin(wave))
-        stats_in = {
-            r["bucket"]: r
-            for r in wave_in.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-            )
-            .collect()
-        }
-        out = process(wave_in.drop("bucket")).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+        wave_in, obs_in = _per_bucket(wave_in, wave, n_spans=F.size("spans"))
+        out = process(wave_in.drop("bucket")).withColumn("bucket", bucket_of)
+        out, obs_out = _per_bucket(out, wave, n_blocks=F.col("n_blocks"))
         # 1) data commit (parquet dir partitioned by bucket — idempotent
         #    per-bucket overwrite via dynamic partition overwrite)
         (
@@ -118,28 +129,20 @@ def process_resumable(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(data_path)
         )
-        out_stats = {
-            r["bucket"]: r["n_blocks"]
-            for r in spark.read.parquet(data_path)
-            .where(F.col("bucket").isin(wave))
-            .groupBy("bucket")
-            .agg(F.sum("n_blocks").alias("n_blocks"))
-            .collect()
-        }
+        got_in, got_out = obs_in.get, obs_out.get
+        bad = [b for b in wave if got_in[f"n_docs_{b}"] != got_out[f"n_docs_{b}"]]
+        if bad:
+            raise RuntimeError(f"docs in != docs out for buckets {bad}; wave not committed")
         # 2) manifest commit — the durable "this bucket is done" record
         now = int(time.time() * 1000)
-        rows = [
-            (
-                run_id,
-                snapshot_id,
-                b,
-                stats_in[b]["n_docs"] if b in stats_in else 0,
-                int(stats_in[b]["n_spans"] or 0) if b in stats_in else 0,
-                int(out_stats.get(b, 0)),
-                now,
-            )
-            for b in wave
-        ]
+        rows = pd.DataFrame(
+            [
+                (run_id, snapshot_id, b, got_in[f"n_docs_{b}"], got_in[f"n_spans_{b}"] or 0,
+                 got_out[f"n_blocks_{b}"] or 0, now)
+                for b in wave
+            ],
+            columns=[c.split()[0] for c in MANIFEST_SCHEMA.split(", ")],
+        )
         spark.createDataFrame(rows, schema=MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(manifest_path)
@@ -152,11 +155,3 @@ def process_resumable(
         "skipped_buckets": sorted(done),
         "out_dir": out_dir,
     }
-
-
-def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, DATA_DIR))
-
-
-def manifest_summary(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, MANIFEST_DIR))

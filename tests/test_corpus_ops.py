@@ -1,7 +1,11 @@
 """Dedup / similarity / text-analysis / multimodal / manifest operators
 over the driver's sf0.001 tables."""
 
+import hashlib
+import os
+
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -141,33 +145,126 @@ def test_spanize_and_extract(documents, spark):
     assert "## Part 1" in md
 
 
+def _manifest_rows(out_dir):
+    """bucket -> (n_docs, n_spans, n_blocks) over every manifest part."""
+    t = pq.read_table(os.path.join(out_dir, manifest.MANIFEST_DIR)).to_pylist()
+    return {r["bucket"]: (r["n_docs"], r["n_spans"], r["n_blocks"]) for r in t}
+
+
+def _extract_md(df):
+    return ex.extract(df, salt=False).select("doc_id", "markdown", "n_blocks")
+
+
 def test_manifest_resume(spark, documents, tmp_path):
     out_dir = str(tmp_path / "resumable")
-    spans = spanize.spanize(documents.limit(64))
+    spans = spanize.spanize(documents.orderBy("doc_id").limit(64))
     snap = manifest.snapshot_id_of(SF_DIR)
 
-    def process(df):
-        return ex.extract(df, salt=False).select("doc_id", "markdown", "n_blocks")
+    def run():
+        return manifest.process_resumable(
+            spans, out_dir, _extract_md, snap, n_buckets=8, wave_size=3
+        )
 
-    # first run: only the first wave commits (simulate kill via n_buckets
-    # slicing: run with a restricted bucket list by monkey wave_size)
-    full = manifest.process_resumable(
-        spans, out_dir, process, snap, n_buckets=8, wave_size=3
-    )
+    full = run()
     assert sorted(full["processed_buckets"]) == list(range(8))
 
     # rerun: everything already committed -> nothing reprocessed
-    again = manifest.process_resumable(
-        spans, out_dir, process, snap, n_buckets=8, wave_size=3
-    )
+    again = run()
     assert again["processed_buckets"] == []
     assert sorted(again["skipped_buckets"]) == list(range(8))
 
-    got = manifest.read_output(spark, out_dir)
-    assert got.count() == 64
-    m = manifest.manifest_summary(spark, out_dir)
-    assert m.select("bucket").distinct().count() == 8
-    assert m.agg(F.sum("n_docs")).collect()[0][0] == 64
+    # per-bucket lineage == direct groupBys over the input and the output
+    data = spark.read.parquet(os.path.join(out_dir, manifest.DATA_DIR))
+    assert data.count() == 64
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int").alias("bucket")
+    n_in = {
+        r["bucket"]: (r["d"], r["s"])
+        for r in spans.groupBy(bucket)
+        .agg(F.count("*").alias("d"), F.sum(F.size("spans")).alias("s"))
+        .collect()
+    }
+    n_out = {
+        r["bucket"]: r["b"]
+        for r in data.groupBy("bucket").agg(F.sum("n_blocks").alias("b")).collect()
+    }
+    rows = _manifest_rows(out_dir)
+    assert rows == {b: (*n_in.get(b, (0, 0)), n_out.get(b, 0)) for b in range(8)}
+
+    # kill after two of three waves: drop the last wave's manifest part;
+    # the resume redoes exactly its buckets and commits the same rows
+    mdir = os.path.join(out_dir, manifest.MANIFEST_DIR)
+    parts = {
+        f: pq.read_table(os.path.join(mdir, f))["bucket"].to_pylist()
+        for f in os.listdir(mdir)
+        if f.endswith(".parquet")
+    }
+    assert len(parts) == 3  # one part file per wave
+    last = next(f for f, buckets in parts.items() if 7 in buckets)
+    os.remove(os.path.join(mdir, last))
+    resumed = run()
+    assert sorted(resumed["processed_buckets"]) == sorted(parts[last]) == [6, 7]
+    assert _manifest_rows(out_dir) == rows
+    assert spark.read.parquet(os.path.join(out_dir, manifest.DATA_DIR)).count() == 64
+
+
+def test_manifest_lineage_check_blocks_commit(spark, documents, tmp_path):
+    """A process that loses a row fails the docs-in == docs-out check:
+    the wave raises and commits no manifest row, earlier waves stay."""
+    out_dir = str(tmp_path / "lossy")
+    spans = spanize.spanize(documents.orderBy("doc_id").limit(32))
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
+    # a doc of the second wave (buckets 2, 3)
+    victim = spans.where(bucket >= 2).select(F.min("doc_id")).collect()[0][0]
+
+    def lossy(df):
+        return _extract_md(df).where(F.col("doc_id") != victim)
+
+    with pytest.raises(RuntimeError, match="docs in != docs out"):
+        manifest.process_resumable(spans, out_dir, lossy, "snap", n_buckets=4, wave_size=2)
+    assert set(_manifest_rows(out_dir)) == {0, 1}
+    assert manifest.committed_buckets(spark, out_dir, "snap") == {0, 1}
+
+
+def _write(path, n_bytes):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_bytes(b"x" * n_bytes)
+
+
+def test_snapshot_id_partitioned_input(tmp_path, monkeypatch):
+    """The id does not depend on directory walk order, and it sees a file
+    moved between partition dirs; a flat dir keeps its name:size id."""
+    flat = tmp_path / "flat"
+    for name, size in (("part-1.parquet", 3), ("part-0.parquet", 5), ("_SUCCESS", 0)):
+        _write(flat / name, size)
+    want = hashlib.md5(b"part-0.parquet:5|part-1.parquet:3").hexdigest()
+    assert manifest.snapshot_id_of(str(flat)) == want
+
+    root = tmp_path / "parts"
+    for b in (3, 2, 0):  # Spark gives each partition's file the same name
+        _write(root / f"b={b}" / "part-00000.parquet", 10 + b)
+    _write(root / "b=0" / "part-00001.parquet", 7)
+    _write(root / "b=1" / "part-00002.parquet", 9)
+
+    real_walk = os.walk
+
+    def walk_in(order):
+        def walk(top, *a, **k):
+            for here, dirs, files in real_walk(top, *a, **k):
+                dirs.sort(reverse=order == "reversed")
+                yield here, dirs, files
+
+        return walk
+
+    monkeypatch.setattr(os, "walk", walk_in("sorted"))
+    snap = manifest.snapshot_id_of(str(root))
+    monkeypatch.setattr(os, "walk", walk_in("reversed"))
+    assert manifest.snapshot_id_of(str(root)) == snap
+
+    # b=0's last file becomes b=1's first: the sequence of names and
+    # sizes is unchanged, only the partition differs
+    os.rename(root / "b=0" / "part-00001.parquet", root / "b=1" / "part-00001.parquet")
+    monkeypatch.setattr(os, "walk", walk_in("sorted"))
+    assert manifest.snapshot_id_of(str(root)) != snap
 
 
 def test_lsh_hot_bucket_cap_chain(spark):
