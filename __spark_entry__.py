@@ -46,7 +46,7 @@ def entry(spark: SparkSession) -> DataFrame:
     with structured metadata and section stats per document.
 
     Renditions are FUSED into the extraction kernel (one Python stage per
-    task — chaining a scalar pandas UDF after mapInPandas doubles the
+    task — chaining a scalar pandas UDF after the map kernel doubles the
     Python workers per task, measured 2× slower at local[32])."""
     from docstrange_spark.operators import extract, navigation, spanize
 

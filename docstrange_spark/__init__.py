@@ -5,8 +5,8 @@ A from-scratch re-expression of the capabilities of smoab/docstrange
 
 - input: a table of interleaved text+media documents
   ``(doc_id string, spans array<struct<kind,text,media_ref,offset>>)``
-- extraction: one Arrow-batched ``mapInPandas`` kernel per partition that
-  tokenizes the span stream, strips DOM boilerplate, orders layout blocks,
+- extraction: one Arrow-batched ``mapInArrow`` kernel per partition that
+  reads the span ListArray's child arrays directly, tokenizes the span stream, strips DOM boilerplate, orders layout blocks,
   recovers table/heading structure and emits Markdown (the engine IR,
   mirroring the reference's markdown-as-IR design, see
   ``/root/reference/docstrange/result.py:689-702``)

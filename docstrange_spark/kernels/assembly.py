@@ -30,12 +30,13 @@ per-group Python survives only where semantics are inherently per-group
 
 from __future__ import annotations
 
-import itertools
 import re
 from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from docstrange_spark.kernels import boilerplate, textproc
 
@@ -82,21 +83,102 @@ def profile_of(doc_id: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# explode / profile
+# span frame: the flat, profiled, sorted span stream the grouping sees
 
 
-def _explode(doc_ids: pd.Series, spans_col: pd.Series) -> pd.DataFrame:
-    lists = [s if s is not None else [] for s in spans_col]
-    counts = np.fromiter((len(s) for s in lists), dtype=np.int64, count=len(lists))
-    records = list(itertools.chain.from_iterable(lists))
-    if records:
-        flat = pd.DataFrame.from_records(records)
-    else:
-        flat = pd.DataFrame(columns=["kind", "text", "media_ref", "offset"])
-    flat["doc_idx"] = np.repeat(np.arange(len(lists)), counts)
-    flat["text"] = flat["text"].fillna("")
-    flat["media_ref"] = flat["media_ref"].fillna("")
-    flat["offset"] = flat["offset"].fillna(0).astype(np.int64)
+# element type of the ``spans`` column (datagen.SPAN_SCHEMA_DDL)
+SPAN_LIST_TYPE = pa.list_(pa.struct(
+    [(n, pa.string()) for n in ("kind", "text", "media_ref")] + [("offset", pa.int32())]
+))
+
+
+def span_frame(doc_ids: pd.Series, spans: pa.Array) -> pd.DataFrame:
+    """One row per span of the ``spans`` ListArray (any slice of it),
+    read straight from its child arrays — no per-span Python objects
+    besides the strings. ``doc_idx`` is the row position in ``doc_ids``.
+    A null list counts as empty and a null span element is dropped.
+    Then the per-doc profile is applied: markup docs get the DOM strip,
+    dropped kinds vanish, unknown kinds become text, rows sort by
+    (doc_idx, offset) and table-cell coordinates are parsed."""
+    lengths = spans.value_lengths().fill_null(0).to_numpy()
+    values = spans.flatten()
+    doc_idx = np.repeat(np.arange(len(spans)), lengths)
+    # StructArray.flatten (unlike .field) folds the element's null bit
+    # into its children, so a null element cannot read as kind ""
+    cols = dict(zip((f.name for f in values.type), values.flatten()))
+    if values.null_count:
+        valid = values.is_valid()
+        cols = {k: c.filter(valid) for k, c in cols.items()}
+        doc_idx = doc_idx[valid.to_numpy(zero_copy_only=False)]
+    flat = pd.DataFrame(
+        {
+            "kind": cols["kind"].to_pandas(),
+            "text": pc.fill_null(cols["text"], "").to_pandas(),
+            "media_ref": pc.fill_null(cols["media_ref"], "").to_pandas(),
+            "offset": pc.fill_null(cols["offset"], 0).to_numpy().astype(np.int64),
+            "doc_idx": doc_idx,
+        }
+    )
+    classes = doc_ids.map(doc_class).to_numpy()
+    flat["profile"] = np.array(
+        [PROFILE_BY_CLASS.get(c, "direct") for c in classes], dtype=object
+    )[doc_idx]
+    flat["capped"] = (classes == "docx_like")[doc_idx]
+
+    # -- markup profile: DOM strip per doc, re-inject filtered spans -------
+    is_markup = flat["profile"].eq("markup")
+    if is_markup.any():
+        msorted = flat[is_markup].sort_values(
+            ["doc_idx", "offset"], kind="stable"
+        )
+        # accumulate ALL markup docs' surviving spans into flat tuple
+        # lists and build ONE frame — per-doc DataFrames + column
+        # assignment dominated this path's profile (~20% of the kernel)
+        mrows: list[tuple] = []
+        mdocs = msorted["doc_idx"].to_numpy()
+        mcols = [msorted[c].to_numpy() for c in ("kind", "text", "media_ref", "offset")]
+        for s, e in zip(*_run_bounds(mdocs)):
+            d = mdocs[s]
+            doc_spans = [
+                {"kind": k, "text": t, "media_ref": m, "offset": o}
+                for k, t, m, o in zip(*(c[s:e] for c in mcols))
+            ]
+            title, content = boilerplate.strip_boilerplate(doc_spans)
+            if title:
+                mrows.append(("heading", title, "h1", -1, d))
+            mrows.extend(
+                (sp["kind"], sp["text"], sp["media_ref"], sp["offset"], d)
+                for sp in content
+            )
+        sub = pd.DataFrame(
+            mrows, columns=["kind", "text", "media_ref", "offset", "doc_idx"]
+        )
+        sub["profile"] = "markup"
+        sub["capped"] = False
+        flat = pd.concat([flat[~is_markup], sub], ignore_index=True)
+        # web-text cleanup: collapse intra-line whitespace (O4)
+        m = flat["profile"].eq("markup") & flat["kind"].eq("text")
+        if m.any():
+            flat.loc[m, "text"] = (
+                flat.loc[m, "text"].str.split().str.join(" ")
+            )
+
+    flat = flat[~flat["kind"].isin(DROP_KINDS)]
+    # unknown kinds degrade to paragraphs — the reference's label
+    # fallback (neural_document_processor.py:374-383: else -> paragraph)
+    unknown = ~flat["kind"].isin(KNOWN_KINDS)
+    if unknown.any():
+        flat.loc[unknown, "kind"] = "text"
+    flat = flat.sort_values(["doc_idx", "offset"], kind="stable").reset_index(drop=True)
+
+    # table-cell coordinates (vectorized parse; only table cells read them)
+    tparsed = flat["media_ref"][flat["kind"].eq("table_cell")].str.extract(TABLE_REF_RE)
+    for col, group, missing in (("_trow", 0, 0), ("_tcol", 1, 0), ("_tid", 2, -1)):
+        flat[col] = (
+            pd.to_numeric(tparsed[group], errors="coerce")
+            .reindex(flat.index).fillna(missing).astype(int)
+        )
+    flat["_tmerged"] = tparsed[3].notna().reindex(flat.index, fill_value=False)
     return flat
 
 
@@ -224,108 +306,56 @@ BLOCK_KIND_BY_SPAN = {
 }
 
 
+def merge_mask(flat: pd.DataFrame) -> pd.Series:
+    """True where a span of a ``span_frame`` continues the previous
+    span's block: same doc and kind, a run kind (or layout/ocr text),
+    and the same code fence / table id, or the next text offset. The
+    one run-merge predicate — block grouping here and the mega-doc
+    segmentation's cut points both read it."""
+    kind = flat["kind"]
+    layoutish = flat["profile"].isin(["layout", "ocr"])
+    mergeable = kind.isin(RUN_KINDS) | (kind.eq("text") & layoutish)
+    aux_same = np.select(
+        [kind.eq("code"), kind.eq("table_cell"), kind.eq("text")],
+        [
+            flat["media_ref"].eq(flat["media_ref"].shift(1)),
+            flat["_tid"].eq(flat["_tid"].shift(1)),
+            flat["offset"].eq(flat["offset"].shift(1) + 1),
+        ],
+        default=True,
+    )
+    return (
+        flat["doc_idx"].eq(flat["doc_idx"].shift(1))
+        & kind.eq(kind.shift(1))
+        & mergeable
+        & pd.Series(aux_same, index=flat.index, dtype=bool)
+    )
+
+
 def assemble_batch(
     doc_ids: pd.Series, spans_col: pd.Series, build_spans: bool = True
 ) -> pd.DataFrame:
-    """Assemble a batch: returns DataFrame (doc_id, markdown, out_spans,
-    n_blocks, profile) aligned with the input order. ``out_spans`` is the
-    emitted block stream as a list of (kind, text, media_ref, offset)
-    dicts — the golden span-sequence surface; pass ``build_spans=False``
-    to skip materializing it (throughput path)."""
+    """Assemble a batch given as lists of span dicts — the in-process
+    oracle form; the extract kernel calls ``assemble_frame`` on the
+    Arrow batch itself. Returns DataFrame (doc_id, markdown, out_spans,
+    n_blocks, profile) aligned with the input order. ``out_spans`` is
+    the emitted block stream as a list of (kind, text, media_ref,
+    offset) dicts — the golden span-sequence surface; pass
+    ``build_spans=False`` to skip materializing it (throughput path)."""
+    doc_ids = doc_ids.reset_index(drop=True)
+    spans = pa.array(list(spans_col), type=SPAN_LIST_TYPE)
+    return assemble_frame(doc_ids, span_frame(doc_ids, spans), build_spans)
+
+
+def assemble_frame(
+    doc_ids: pd.Series, flat: pd.DataFrame, build_spans: bool = True
+) -> pd.DataFrame:
+    """Assemble the docs of a ``span_frame`` (or a slice of one cut
+    where ``merge_mask`` is False) into the ``assemble_batch`` output."""
     n_docs = len(doc_ids)
-    classes = doc_ids.map(doc_class)
-    profiles = classes.map(lambda c: PROFILE_BY_CLASS.get(c, "direct")).to_numpy()
-
-    flat = _explode(doc_ids.reset_index(drop=True), spans_col.reset_index(drop=True))
-    flat["profile"] = pd.Series(profiles).reindex(flat["doc_idx"]).to_numpy()
-    flat["capped"] = classes.eq("docx_like").reset_index(drop=True).reindex(flat["doc_idx"]).to_numpy()
-
-    # -- markup profile: DOM strip per doc, re-inject filtered spans -------
-    is_markup = flat["profile"].eq("markup")
-    if is_markup.any():
-        msorted = flat[is_markup].sort_values(
-            ["doc_idx", "offset"], kind="stable"
-        )
-        # accumulate ALL markup docs' surviving spans into flat tuple
-        # lists and build ONE frame — per-doc DataFrames + column
-        # assignment dominated this path's profile (~20% of the kernel)
-        mrows: list[tuple] = []
-        for doc_idx, grp in msorted.groupby("doc_idx", sort=False):
-            spans = [
-                {"kind": k, "text": t, "media_ref": m, "offset": o}
-                for k, t, m, o in zip(
-                    grp["kind"].to_numpy(), grp["text"].to_numpy(),
-                    grp["media_ref"].to_numpy(), grp["offset"].to_numpy(),
-                )
-            ]
-            title, content = boilerplate.strip_boilerplate(spans)
-            if title:
-                mrows.append(("heading", title, "h1", -1, doc_idx))
-            mrows.extend(
-                (sp["kind"], sp["text"], sp["media_ref"], sp["offset"], doc_idx)
-                for sp in content
-            )
-        sub = pd.DataFrame(
-            mrows, columns=["kind", "text", "media_ref", "offset", "doc_idx"]
-        )
-        sub["profile"] = "markup"
-        sub["capped"] = False
-        flat = pd.concat([flat[~is_markup], sub], ignore_index=True)
-        # web-text cleanup: collapse intra-line whitespace (O4)
-        m = flat["profile"].eq("markup") & flat["kind"].eq("text")
-        if m.any():
-            flat.loc[m, "text"] = (
-                flat.loc[m, "text"].str.split().str.join(" ")
-            )
-
-    flat = flat[~flat["kind"].isin(DROP_KINDS)]
-    # unknown kinds degrade to paragraphs — the reference's label
-    # fallback (neural_document_processor.py:374-383: else -> paragraph)
-    unknown = ~flat["kind"].isin(KNOWN_KINDS)
-    if unknown.any():
-        flat.loc[unknown, "kind"] = "text"
-    flat = flat.sort_values(["doc_idx", "offset"], kind="stable").reset_index(drop=True)
-
-    if len(flat):
-        # -- table-cell coordinates (vectorized parse) ---------------------
-        tparsed = flat["media_ref"].str.extract(TABLE_REF_RE)
-        flat["_trow"] = pd.to_numeric(tparsed[0], errors="coerce").fillna(0).astype(int)
-        flat["_tcol"] = pd.to_numeric(tparsed[1], errors="coerce").fillna(0).astype(int)
-        flat["_tid"] = pd.to_numeric(tparsed[2], errors="coerce").fillna(-1).astype(int)
-        flat["_tmerged"] = tparsed[3].notna()
-
-        # -- block grouping: vectorized segmented scan ---------------------
-        kind = flat["kind"]
-        layoutish = flat["profile"].isin(["layout", "ocr"])
-        prev_doc = flat["doc_idx"].shift(1)
-        prev_kind = kind.shift(1)
-        prev_ref = flat["media_ref"].shift(1)
-        prev_tid = flat["_tid"].shift(1)
-        prev_off = flat["offset"].shift(1)
-
-        mergeable = kind.isin(RUN_KINDS) | (kind.eq("text") & layoutish)
-        aux_same = np.select(
-            [kind.eq("code"), kind.eq("table_cell"), kind.eq("text")],
-            [
-                flat["media_ref"].eq(prev_ref),
-                flat["_tid"].eq(prev_tid),
-                flat["offset"].eq(prev_off + 1),
-            ],
-            default=True,
-        )
-        merge = (
-            flat["doc_idx"].eq(prev_doc)
-            & kind.eq(prev_kind)
-            & mergeable
-            & pd.Series(aux_same, index=flat.index)
-        )
-        flat["block_id"] = (~merge).cumsum()
-        flat["line"] = _render_simple_lines(flat)
-    else:
-        flat["block_id"] = pd.Series(dtype=np.int64)
-        flat["line"] = pd.Series(dtype=object)
-        for c in ("_trow", "_tcol", "_tid", "_tmerged"):
-            flat[c] = pd.Series(dtype=object)
+    profiles = doc_ids.map(profile_of).to_numpy()
+    flat["block_id"] = (~merge_mask(flat)).cumsum()
+    flat["line"] = _render_simple_lines(flat)
 
     # -- aggregate groups into blocks: vectorized fast paths per kind ------
     out_parts: list[pd.DataFrame] = []

@@ -6,10 +6,11 @@ Scale design (the north rule's partitioning/shuffle/skew clause):
 - **salted repartition by xxhash64(doc_id)**: documents spread uniformly
   regardless of doc_id distribution, defusing producer skew (e.g. one
   crawl batch's docs landing in one input file);
-- **span-budget batch slicing** (in-kernel): each Arrow batch is split so
-  no kernel invocation holds more than ``MAX_BATCH_SPANS`` spans — a
-  mega-document (100× median span count) costs one small sub-batch, not
-  an OOM, at any ``maxRecordsPerBatch`` setting;
+- **span-budget batch slicing** (in-kernel): each Arrow batch is cut on
+  the cumulative list lengths so no kernel invocation holds more than
+  ``MAX_BATCH_SPANS`` spans — a mega-document (100× median span count)
+  costs one small sub-batch, not an OOM, at any ``maxRecordsPerBatch``
+  setting;
 - **optional two-tier mega routing** (``mega_threshold``): documents with
   ``size(spans) >= threshold`` shuffle into their own partition set so a
   straggler mega-doc occupies one task. Off by default — it costs a
@@ -18,11 +19,13 @@ Scale design (the north rule's partitioning/shuffle/skew clause):
   handles the common case in one exchange;
 - **fused renditions**: ``formats=("json", ...)`` computes renditions
   inside the same Python worker as assembly. Chaining a separate pandas
-  UDF would double the Python processes per task (mapInPandas worker +
-  UDF worker), oversubscribing CPUs at high parallelism — measured 2×
+  UDF would double the Python processes per task (kernel worker + UDF
+  worker), oversubscribing CPUs at high parallelism — measured 2×
   slower at local[32] — and ships the markdown through Arrow twice.
 
-The kernel is ``mapInPandas`` over Arrow batches — no per-row Python.
+The kernel is ``mapInArrow``: it builds its flat span frame from the
+``spans`` ListArray's list lengths and child arrays (no per-span Python
+dicts) and returns Arrow batches — no per-row Python.
 """
 
 from __future__ import annotations
@@ -30,56 +33,47 @@ from __future__ import annotations
 import json
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+from pyspark.sql.types import BooleanType, IntegerType, StringType
+from pyspark.sql.types import StructField, StructType
 
 from docstrange_spark.kernels.assembly import (
-    DROP_KINDS,
-    KNOWN_KINDS,
-    TABLE_REF_RE,
-    assemble_batch,
+    SPAN_LIST_TYPE,
+    assemble_frame,
+    merge_mask,
     profile_of,
+    span_frame,
 )
 
-
-def _tid_of(media_ref: str | None) -> int:
-    """Table id exactly as the assembly kernel derives it (regex match,
-    -1 on no-match — mirrors to_numeric(...).fillna(-1))."""
-    m = TABLE_REF_RE.match(media_ref or "")
-    return int(m.group(3)) if m else -1
-
-BASE_SCHEMA = (
-    "doc_id string, markdown string, "
-    "out_spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
-    "n_blocks int, profile string"
-)
+_STR = StringType()
 
 # the doc_meta field spec — single source of truth for the fused-kernel
-# DDL, the kernel's dict extraction, and renditions.META_SCHEMA
-META_FIELDS: tuple[tuple[str, str, object], ...] = (
-    ("total_sections", "int", 0),
-    ("max_heading_level", "int", 0),
-    ("has_tables", "boolean", False),
-    ("has_code_blocks", "boolean", False),
-    ("has_lists", "boolean", False),
-    ("has_images", "boolean", False),
+# schema, the kernel's dict extraction, and renditions.META_SCHEMA
+META_FIELDS: tuple[tuple[str, object, object], ...] = (
+    ("total_sections", IntegerType(), 0),
+    ("max_heading_level", IntegerType(), 0),
+    ("has_tables", BooleanType(), False),
+    ("has_code_blocks", BooleanType(), False),
+    ("has_lists", BooleanType(), False),
+    ("has_images", BooleanType(), False),
 )
+META_SCHEMA = StructType([StructField(n, t) for n, t, _ in META_FIELDS])
 
 RENDITION_COLS = {
-    "json": " json string",
-    "html": " html string",
-    "csv": " csv string",
+    "json": StructField("json", _STR),
+    "html": StructField("html", _STR),
+    "csv": StructField("csv", _STR),
     # processor-selected variants: R6 (GPU-badged page,
     # gpu_processor.py:60-78) and R7 (cloud flat-json envelope,
     # cloud_processor.py:168-175) as first-class fused renditions
-    "html_gpu": " html_gpu string",
-    "json_cloud": " json_cloud string",
-    "meta": (
-        " doc_meta struct<"
-        + ",".join(f"{n}:{t}" for n, t, _ in META_FIELDS)
-        + ">"
-    ),
+    "html_gpu": StructField("html_gpu", _STR),
+    "json_cloud": StructField("json_cloud", _STR),
+    "meta": StructField("doc_meta", META_SCHEMA),
 }
 
 # rendition column emission order (schema construction)
@@ -88,113 +82,67 @@ _FORMAT_ORDER = ("json", "html", "csv", "html_gpu", "json_cloud", "meta")
 # max spans per kernel invocation (memory ceiling per Python worker)
 MAX_BATCH_SPANS = 1 << 17
 
+# the kernel's input batch, for callers that hand it pandas frames
+_INPUT_SCHEMA = pa.schema([("doc_id", pa.string()), ("spans", SPAN_LIST_TYPE)])
 
-def _slice_by_span_budget(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-    sizes = pdf["spans"].map(lambda s: len(s) if s is not None else 0)
-    if sizes.sum() <= MAX_BATCH_SPANS:
-        yield pdf
-        return
+
+def _slice_by_span_budget(
+    batch: pa.RecordBatch, budget: int
+) -> Iterator[pa.RecordBatch]:
+    """Consecutive row slices of ``batch`` holding at most ``budget``
+    spans each, cut on the cumulative list lengths; a row over the
+    budget sits alone in its slice."""
+    cum = np.cumsum(batch.column("spans").value_lengths().fill_null(0).to_numpy())
     start = 0
-    budget = 0
-    for i, n in enumerate(sizes):
-        if budget + n > MAX_BATCH_SPANS and i > start:
-            yield pdf.iloc[start:i]
-            start, budget = i, 0
-        budget += n
-    if start < len(pdf):
-        yield pdf.iloc[start:]
+    while start < batch.num_rows:
+        base = cum[start - 1] if start else 0
+        end = max(start + 1, int(np.searchsorted(cum, base + budget, side="right")))
+        yield batch.slice(start, end - start)
+        start = end
 
 
 # ---------------------------------------------------------------------------
 # within-row segmentation: ONE document whose span count exceeds the
-# budget is assembled in slices and merged order-preservingly, so a
-# 10^6-span mega-doc costs a sequence of bounded kernel invocations
-# instead of one worker-sized allocation. Cuts land only where the
-# assembly's run-merge predicate is False (kind change, table id change,
-# code fence change, text offset gap), so the segmented output is
-# byte-identical to the unsegmented one. A single run larger than the
-# budget forms one oversized slice (its semantics — smart join, grid
-# pivot — need the whole run); markup documents are never segmented
-# (the DOM walk needs the whole tag tree).
+# budget is assembled in slices of its own span frame and merged
+# order-preservingly, so a 10^6-span mega-doc costs a sequence of
+# bounded kernel invocations instead of one worker-sized allocation,
+# and never becomes Python dicts. Cuts land only where the kernel's own
+# ``merge_mask`` is False, so no block straddles a cut and the
+# segmented output is byte-identical to the unsegmented one. A single
+# run larger than the budget forms one oversized slice (its semantics
+# — smart join, grid pivot — need the whole run); markup documents are
+# never segmented (the DOM walk needs the whole tag tree).
 
 
-def _can_cut(prev: dict, cur: dict, layoutish: bool) -> bool:
-    pk, ck = prev.get("kind"), cur.get("kind")
-    if pk != ck:
-        return True
-    if ck in ("heading", "image", "link", "page_break"):
-        return True  # singleton kinds never merge into runs
-    if ck == "text":
-        if not layoutish:
-            return True  # direct/markup text spans never merge into runs
-        return (cur.get("offset") or 0) != (prev.get("offset") or 0) + 1
-    if ck == "table_cell":
-        # cut only between tables — parsed with the SAME regex + -1
-        # fallback as assembly's _tid column, else the predicates drift
-        # (fuzz-found: an unparseable ref must compare equal to another
-        # unparseable ref, exactly like to_numeric().fillna(-1))
-        return _tid_of(prev.get("media_ref")) != _tid_of(cur.get("media_ref"))
-    if ck == "code":
-        return (prev.get("media_ref") or "") != (cur.get("media_ref") or "")
-    return False  # list_item / blockquote runs and singleton kinds
-
-
-def _segment_spans(spans: list, budget: int, layoutish: bool) -> Iterator[list]:
-    """Slice a sorted span stream at positions where the assembly's
-    run-merge predicate is False — evaluated on the EFFECTIVE stream the
-    kernel sees: dropped kinds (script/style/tag_*) vanish before run
-    grouping, so two run members separated only by dropped spans still
-    merge (fuzz-found), and unknown kinds degrade to text."""
-    ordered = sorted(spans, key=lambda s: s.get("offset") or 0)
-    n = len(ordered)
-
-    def _effective(s: dict) -> dict | None:
-        k = s.get("kind")
-        if k in DROP_KINDS:
-            return None
-        if k not in KNOWN_KINDS:
-            return {**s, "kind": "text"}
-        return s
-
-    eff = [_effective(s) for s in ordered]
-    # nearest effective span strictly before / at-or-after each position
-    prev_eff: list[dict | None] = [None] * n
-    last = None
-    for i in range(n):
-        prev_eff[i] = last
-        if eff[i] is not None:
-            last = eff[i]
-    next_eff: list[dict | None] = [None] * n
-    nxt = None
-    for i in range(n - 1, -1, -1):
-        if eff[i] is not None:
-            nxt = eff[i]
-        next_eff[i] = nxt
-
-    start = 0
-    for i in range(1, n):
-        if i - start < budget:
-            continue
-        p, c = prev_eff[i], next_eff[i]
-        if p is None or c is None or _can_cut(p, c, layoutish):
-            yield ordered[start:i]
-            start = i
-    yield ordered[start:]
+def _segments(frame: pd.DataFrame, budget: int) -> list[tuple[int, int]]:
+    """(start, end) row slices of one document's ``span_frame``: each
+    slice but the last holds at least ``budget`` spans and ends at the
+    first block start after that."""
+    starts = np.flatnonzero(~merge_mask(frame).to_numpy())
+    bounds = [0]
+    while True:
+        j = int(np.searchsorted(starts, bounds[-1] + budget))
+        if j == len(starts):
+            break
+        bounds.append(int(starts[j]))
+    bounds.append(len(frame))
+    return list(zip(bounds, bounds[1:]))
 
 
 def _assemble_megadoc(
-    doc_id: str, spans: list, build_spans: bool, budget: int
+    doc_id: str, spans: pa.Array, build_spans: bool, budget: int
 ) -> pd.DataFrame:
+    """Assemble the one-row ``spans`` ListArray of ``doc_id`` segment
+    by segment."""
+    ids = pd.Series([doc_id])
+    frame = span_frame(ids, spans)
     md_parts: list[str] = []
     spans_out: list[dict] = []
     n_blocks = 0
-    profile = None
-    layoutish = profile_of(doc_id) in ("layout", "ocr")
-    for seg in _segment_spans(spans, budget, layoutish):
-        part = assemble_batch(
-            pd.Series([doc_id]), pd.Series([seg]), build_spans=build_spans
+    for s, e in _segments(frame, budget):
+        part = assemble_frame(
+            ids, frame.iloc[s:e].reset_index(drop=True), build_spans=build_spans
         )
-        profile = part["profile"].iat[0]
         # gate on block count, NOT markdown truthiness: blocks with empty
         # text still occupy join positions (fuzz-found edge)
         if int(part["n_blocks"].iat[0]):
@@ -207,17 +155,35 @@ def _assemble_megadoc(
     if build_spans:
         out["out_spans"] = [spans_out]
     out["n_blocks"] = [n_blocks]
-    out["profile"] = [profile]
+    out["profile"] = [profile_of(doc_id)]
     return pd.DataFrame(out)
 
 
+def _schema_for(formats: tuple[str, ...], include_spans: bool = True) -> StructType:
+    fields = [StructField("doc_id", _STR), StructField("markdown", _STR)]
+    if include_spans:
+        # the block stream has the input's span element type
+        fields.append(StructField("out_spans", from_arrow_type(SPAN_LIST_TYPE)))
+    fields += [StructField("n_blocks", IntegerType()), StructField("profile", _STR)]
+    return StructType(
+        fields + [RENDITION_COLS[f] for f in _FORMAT_ORDER if f in formats]
+    )
+
+
+BASE_SCHEMA = _schema_for(())
+
+
 def _make_kernel(formats: tuple[str, ...] = (), include_spans: bool = True):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    out_schema = to_arrow_schema(_schema_for(formats, include_spans))
+
+    def kernel(
+        batches: Iterator[pa.RecordBatch | pd.DataFrame],
+    ) -> Iterator[pa.RecordBatch]:
         # renditions imported lazily so the worker pays only for what it uses
         if formats:
             from docstrange_spark.kernels import mdcsv, mdhtml, mdjson
 
-        def _finish(out: pd.DataFrame) -> pd.DataFrame:
+        def _finish(out: pd.DataFrame) -> pa.RecordBatch:
             if {"json", "meta", "json_cloud"} & set(formats):
                 # one parse per doc feeds the JSON rendition, the typed
                 # metadata struct, AND the cloud envelope
@@ -258,55 +224,50 @@ def _make_kernel(formats: tuple[str, ...] = (), include_spans: bool = True):
                     out["html_gpu"] = pages.map(mdhtml.add_gpu_badge)
             if "csv" in formats:
                 out["csv"] = out["markdown"].map(mdcsv.markdown_to_csv)
-            return out
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sizes = pdf["spans"].map(lambda s: len(s) if s is not None else 0)
-            # within-row segmentation for mega docs (markup excluded:
-            # the DOM walk needs the whole tag tree)
-            is_mega = (sizes > MAX_BATCH_SPANS) & (
-                pdf["doc_id"].map(profile_of) != "markup"
+            return pa.RecordBatch.from_pandas(
+                out, schema=out_schema, preserve_index=False
             )
-            for _, row in pdf[is_mega].iterrows():
-                yield _finish(
-                    _assemble_megadoc(
-                        row["doc_id"],
-                        list(row["spans"]),
-                        build_spans=include_spans,
-                        budget=MAX_BATCH_SPANS,
-                    )
+
+        for batch in batches:
+            if isinstance(batch, pd.DataFrame):
+                # pandas callers (bench.py's skew probe) convert once here
+                batch = pa.RecordBatch.from_pandas(
+                    batch[["doc_id", "spans"]],
+                    schema=_INPUT_SCHEMA,
+                    preserve_index=False,
                 )
-            normal = pdf[~is_mega]
-            if not len(normal):
+            if not batch.num_rows:
                 continue
-            for chunk in _slice_by_span_budget(normal):
+            spans = batch.column("spans")
+            big = spans.value_lengths().fill_null(0).to_numpy() > MAX_BATCH_SPANS
+            if big.any():
+                # within-row segmentation for mega docs (markup excluded:
+                # the DOM walk needs the whole tag tree)
+                doc_ids = batch.column("doc_id").to_pylist()
+                is_mega = big & np.array([profile_of(d) != "markup" for d in doc_ids])
+                for i in np.flatnonzero(is_mega):
+                    yield _finish(
+                        _assemble_megadoc(
+                            doc_ids[i],
+                            spans.slice(i, 1),
+                            build_spans=include_spans,
+                            budget=MAX_BATCH_SPANS,
+                        )
+                    )
+                batch = batch.filter(pa.array(~is_mega))
+            for chunk in _slice_by_span_budget(batch, MAX_BATCH_SPANS):
+                ids = chunk.column("doc_id").to_pandas()
                 # include_spans=False skips building AND Arrow-shipping the
                 # block stream (the fattest column) on the throughput path
                 yield _finish(
-                    assemble_batch(
-                        chunk["doc_id"], chunk["spans"], build_spans=include_spans
+                    assemble_frame(
+                        ids,
+                        span_frame(ids, chunk.column("spans")),
+                        build_spans=include_spans,
                     )
                 )
 
     return kernel
-
-
-# default kernel (no fused renditions) — used by the streaming module too
-_extract_kernel = _make_kernel()
-
-
-NOSPANS_SCHEMA = (
-    "doc_id string, markdown string, n_blocks int, profile string"
-)
-
-
-def _schema_for(formats: tuple[str, ...], include_spans: bool = True) -> str:
-    base = BASE_SCHEMA if include_spans else NOSPANS_SCHEMA
-    return base + "".join(
-        "," + RENDITION_COLS[f] for f in _FORMAT_ORDER if f in formats
-    )
 
 
 def extract(
@@ -323,13 +284,11 @@ def extract(
     Returns ``(doc_id, markdown, out_spans, n_blocks, profile[,
     renditions...])``.
 
-    Measured cost structure at sf0.1/local[32] (medians): scan ~0.5s,
-    +salt shuffle ~0.3s, a NO-OP pandas stage over the same input
-    ~1.7s, the full fused kernel ~3.2s — i.e. roughly half the wall is
-    the Arrow round-trip of the fat span column, not Python compute. A
-    ``mapInArrow`` variant that flattens the ListArray without per-span
-    dict materialization measured no better (2.0s for the no-op) on
-    this host, so the pandas interface stays.
+    The kernel is ``mapInArrow``: ``mapInPandas`` would turn every span
+    struct into a Python dict before the kernel sees it. On a 4-core
+    host (local[4], 10k scaled docs, median of 5) an identity stage over
+    the span column took 1.21 s through ``mapInPandas`` and 0.81 s
+    through ``mapInArrow``.
     """
     spark = df.sparkSession
     n_part = parallelism or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -338,10 +297,10 @@ def extract(
     base = df.select("doc_id", "spans")
 
     if not salt:
-        return base.mapInPandas(kernel, schema=schema)
+        return base.mapInArrow(kernel, schema=schema)
 
     if mega_threshold is None:
-        return base.repartition(n_part, F.xxhash64("doc_id")).mapInPandas(
+        return base.repartition(n_part, F.xxhash64("doc_id")).mapInArrow(
             kernel, schema=schema
         )
 
@@ -356,6 +315,6 @@ def extract(
         .repartition(n_part, F.xxhash64("doc_id"))
         .drop("_n_spans")
     )
-    return small.mapInPandas(kernel, schema=schema).unionByName(
-        big.mapInPandas(kernel, schema=schema)
+    return small.mapInArrow(kernel, schema=schema).unionByName(
+        big.mapInArrow(kernel, schema=schema)
     )

@@ -14,13 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType
 
 from docstrange_spark.kernels import mdcsv, mdhtml, mdjson
 
@@ -52,13 +46,8 @@ def md_to_csv(md: pd.Series) -> pd.Series:
 
 # structured (typed) metadata — lets downstream queries stay relational.
 # Field spec shared with the fused extraction kernel (extract.META_FIELDS)
-# so the three shapes (DDL, UDF schema, extraction defaults) cannot drift.
-from docstrange_spark.operators.extract import META_FIELDS  # noqa: E402
-
-_META_TYPES = {"int": IntegerType(), "boolean": BooleanType()}
-META_SCHEMA = StructType(
-    [StructField(n, _META_TYPES[t]) for n, t, _ in META_FIELDS]
-)
+# so the shapes (fused schema, UDF schema, extraction defaults) cannot drift.
+from docstrange_spark.operators.extract import META_FIELDS, META_SCHEMA  # noqa: E402
 
 
 @pandas_udf(META_SCHEMA)

@@ -19,10 +19,11 @@ from pyspark.sql import SparkSession
 # blow executor memory regardless of this setting. (The reference
 # processes one doc at a time — /root/reference/docstrange/
 # extractor.py:200-225 — so it never faces this; we do.)
-# Round-6 A/B at sf0.1/local[32], 5 runs each: 1024 -> 3.28 s median,
-# 2048 -> 2.77 s, 4096 -> 2.84 s, 8192 -> 2.85 s; 2048 keeps the
-# per-batch overhead win while staying well under the span budget
-# (~40 spans/doc x 2048 ~ 80k spans per batch).
+# A/B with the mapInArrow kernel on a 4-core host (local[4],
+# perfbench extract_json, 5 interleaved rounds, seeds 81-85): median
+# docs/s 1024 -> 4675, 2048 -> 5101, 4096 -> 4656; neither other size
+# beat 2048 in more than 2 of the 5 rounds. 2048 also stays well under
+# the span budget (~40 spans/doc x 2048 ~ 80k spans per batch).
 ARROW_MAX_RECORDS = 2048
 
 

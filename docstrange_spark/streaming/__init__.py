@@ -3,7 +3,7 @@
 The reference is strictly batch (one-shot per document); a web-scale
 deployment ingests continuously, so the engine exposes the same kernel
 as a streaming stage: ``readStream`` over the span table directory ->
-``mapInPandas`` extract -> sink. The kernel is stateless per document,
+``mapInArrow`` extract -> sink. The kernel is stateless per document,
 so no watermark/state is needed for extraction itself; the manifest
 layer covers replay (exactly-once via file-sink transaction log +
 checkpointLocation).
@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from docstrange_spark.datagen import SPAN_SCHEMA_DDL
-from docstrange_spark.operators.extract import BASE_SCHEMA, _extract_kernel
+from docstrange_spark.operators.extract import BASE_SCHEMA, _make_kernel
 
 
 def read_span_stream(spark: SparkSession, path: str, max_files: int = 8) -> DataFrame:
@@ -28,8 +28,8 @@ def read_span_stream(spark: SparkSession, path: str, max_files: int = 8) -> Data
 def extract_stream(stream_df: DataFrame) -> DataFrame:
     """Streaming extraction: same kernel, streaming plan. Salting is a
     no-op in micro-batch mode (each batch is already file-bounded)."""
-    return stream_df.select("doc_id", "spans").mapInPandas(
-        _extract_kernel, schema=BASE_SCHEMA
+    return stream_df.select("doc_id", "spans").mapInArrow(
+        _make_kernel(), schema=BASE_SCHEMA
     )
 
 

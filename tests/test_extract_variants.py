@@ -1,11 +1,12 @@
 """Extraction variants must be semantically identical: fused renditions ==
 standalone UDFs; span-budget slicing and mega routing invisible."""
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from docstrange_spark import datagen
+from docstrange_spark.kernels.assembly import SPAN_LIST_TYPE
 from docstrange_spark.operators import extract, renditions
 
 
@@ -36,27 +37,25 @@ def test_span_budget_slicing_invisible(spark, monkeypatch):
 
 
 def test_slicer_unit():
-    pdf = pd.DataFrame(
+    span = {"kind": "text", "text": "t", "media_ref": "", "offset": 0}
+    sizes = (10, 10, 200, 10, 500, 10)
+    batch = pa.RecordBatch.from_pydict(
         {
             "doc_id": [f"d{i}" for i in range(6)],
-            "spans": [[{"k": 1}] * n for n in (10, 10, 200, 10, 500, 10)],
+            "spans": pa.array([[span] * n for n in sizes], type=SPAN_LIST_TYPE),
         }
     )
-    import docstrange_spark.operators.extract as ex_mod
-
-    old = ex_mod.MAX_BATCH_SPANS
-    ex_mod.MAX_BATCH_SPANS = 100
-    try:
-        chunks = list(ex_mod._slice_by_span_budget(pdf))
-    finally:
-        ex_mod.MAX_BATCH_SPANS = old
-    # every doc appears exactly once, order preserved
-    ids = [d for c in chunks for d in c["doc_id"]]
-    assert ids == list(pdf["doc_id"])
-    # oversized docs sit alone in their chunk
-    for c in chunks:
-        sizes = c["spans"].map(len)
-        assert sizes.sum() <= 100 or len(c) == 1
+    # sliced input: the ListArray's offsets no longer start at 0
+    for b in (batch, batch.slice(1, 5)):
+        chunks = list(extract._slice_by_span_budget(b, 100))
+        # every doc appears exactly once, order preserved
+        ids = [d for c in chunks for d in c.column("doc_id").to_pylist()]
+        assert ids == b.column("doc_id").to_pylist()
+        # oversized docs sit alone in their chunk
+        for c in chunks:
+            n = c.column("spans").value_lengths().to_numpy()
+            assert n.sum() <= 100 or c.num_rows == 1
+        assert [c.num_rows for c in chunks][-3:] == [1, 1, 1]
 
 
 def test_fused_processor_variants_html_gpu_json_cloud(spark):

@@ -178,7 +178,7 @@ def test_extract_plan_shape(spark):
         .toString()
     )
     assert "xxhash64(doc_id" in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
 
     plan2 = (
         extract.extract(datagen.fixture_spans(spark), mega_threshold=1000)
@@ -186,7 +186,7 @@ def test_extract_plan_shape(spark):
         .executedPlan()
         .toString()
     )
-    assert plan2.count("MapInPandas") == 2  # small tier + mega tier
+    assert plan2.count("MapInArrow") == 2  # small tier + mega tier
 
 
 def test_streaming_near_dup_matches_batch(spark, tmp_path):

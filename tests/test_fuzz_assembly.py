@@ -5,6 +5,7 @@ coherent block stream."""
 
 import hypothesis.strategies as st
 import pandas as pd
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 
 from docstrange_spark.kernels import assembly
@@ -94,7 +95,8 @@ def test_segmented_assembly_equals_whole(doc_class, spans, budget):
 
     doc_id = f"{doc_class}-fuzz"
     whole = assembly.assemble_batch(pd.Series([doc_id]), pd.Series([spans]))
-    seg = extract._assemble_megadoc(doc_id, spans, build_spans=True, budget=budget)
+    row = pa.array([spans], type=assembly.SPAN_LIST_TYPE)
+    seg = extract._assemble_megadoc(doc_id, row, build_spans=True, budget=budget)
     assert seg["markdown"].iat[0] == whole["markdown"].iat[0]
     assert int(seg["n_blocks"].iat[0]) == int(whole["n_blocks"].iat[0])
     assert seg["out_spans"].iat[0] == whole["out_spans"].iat[0]

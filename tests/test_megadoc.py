@@ -4,10 +4,25 @@ output must be byte-identical to the unsegmented assembly, and a
 10^6-span document must flow through Spark end-to-end."""
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from docstrange_spark.kernels.assembly import assemble_batch
+from docstrange_spark.kernels.assembly import (
+    SPAN_LIST_TYPE,
+    assemble_batch,
+    merge_mask,
+    span_frame,
+)
 from docstrange_spark.operators import extract
+
+
+def _row(spans: list[dict]) -> pa.Array:
+    """One document's spans as the one-row ListArray the kernel slices."""
+    return pa.array([spans], type=SPAN_LIST_TYPE)
+
+
+def _frame(doc_id: str, spans: list[dict]) -> pd.DataFrame:
+    return span_frame(pd.Series([doc_id]), _row(spans))
 
 
 def _mixed_layout_doc(n_groups: int) -> list[dict]:
@@ -61,18 +76,23 @@ def test_segmented_equals_unsegmented(budget):
     doc_id = "pdf_pages-seg"
     spans = _mixed_layout_doc(12)
     whole = assemble_batch(pd.Series([doc_id]), pd.Series([spans]))
-    seg = extract._assemble_megadoc(doc_id, spans, build_spans=True, budget=budget)
+    seg = extract._assemble_megadoc(doc_id, _row(spans), build_spans=True, budget=budget)
     assert seg["markdown"].iat[0] == whole["markdown"].iat[0]
     assert int(seg["n_blocks"].iat[0]) == int(whole["n_blocks"].iat[0])
     assert seg["out_spans"].iat[0] == whole["out_spans"].iat[0]
 
 
 def test_cut_never_splits_runs():
-    spans = _mixed_layout_doc(4)
+    frame = _frame("pdf_pages-cut", _mixed_layout_doc(4))
+    merge = merge_mask(frame)
     # with budget 1, every slice boundary must still fall on a run edge
-    segs = list(extract._segment_spans(spans, budget=1, layoutish=True))
-    for a, b in zip(segs, segs[1:]):
-        assert extract._can_cut(a[-1], b[0], layoutish=True)
+    segs = extract._segments(frame, budget=1)
+    assert len(segs) > 1
+    assert [s for s, _ in segs[1:]] == [e for _, e in segs[:-1]]
+    for s, _ in segs[1:]:
+        assert not merge.iat[s]
+    # ... and every run edge is one (budget 1 cuts as early as it can)
+    assert [s for s, _ in segs] == [i for i in range(len(frame)) if not merge.iat[i]]
 
 
 def test_single_oversized_run_stays_whole():
@@ -81,9 +101,9 @@ def test_single_oversized_run_stays_whole():
         {"kind": "text", "text": f"t{i}", "media_ref": "", "offset": i}
         for i in range(50)
     ]
-    segs = list(extract._segment_spans(spans, budget=10, layoutish=True))
-    assert len(segs) == 1  # uncuttable run forms one oversized slice
-    seg = extract._assemble_megadoc("pdf_pages-run", spans, True, budget=10)
+    segs = extract._segments(_frame("pdf_pages-run", spans), budget=10)
+    assert segs == [(0, 50)]  # uncuttable run forms one oversized slice
+    seg = extract._assemble_megadoc("pdf_pages-run", _row(spans), True, budget=10)
     whole = assemble_batch(pd.Series(["pdf_pages-run"]), pd.Series([spans]))
     assert seg["markdown"].iat[0] == whole["markdown"].iat[0]
 
@@ -120,9 +140,9 @@ def test_direct_profile_mega_doc_segments_freely():
         {"kind": "text", "text": f"p{i}", "media_ref": "", "offset": i}
         for i in range(100)
     ]
-    segs = list(extract._segment_spans(spans, budget=10, layoutish=False))
+    segs = extract._segments(_frame("txt_plain-big", spans), budget=10)
     assert len(segs) == 10
-    seg = extract._assemble_megadoc("txt_plain-big", spans, True, budget=10)
+    seg = extract._assemble_megadoc("txt_plain-big", _row(spans), True, budget=10)
     whole = assemble_batch(pd.Series(["txt_plain-big"]), pd.Series([spans]))
     assert seg["markdown"].iat[0] == whole["markdown"].iat[0]
     assert seg["out_spans"].iat[0] == whole["out_spans"].iat[0]
